@@ -145,7 +145,6 @@ def _extra_probes():
         _KCORE_ROUNDS,
         _PAGERANK_ITERS,
         kcore_parts,
-        order_copair_stream,
         pagerank_parts,
     )
 
@@ -280,17 +279,6 @@ def _extra_probes():
         "graph_pagerank_x2rounds": lambda s, d: pagerank_parts(
             s, d, 2 * _PAGERANK_ITERS
         ),
-        # per-stage breakdown (round-7 verdict #4): the mining stage
-        # alone (basket pair expansion + canonical-dedup shuffle, no
-        # checkpoint). With x1/x2rounds this decomposes the entry:
-        # rounds-marginal = x2 - x1; mining = this probe; the
-        # remainder is checkpoint materialization + final sort. Lets
-        # round 9 tell a mining regression from round-cost drift.
-        "graph_pagerank_mine_stage": lambda s, d: order_copair_stream(
-            s, d
-        )
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates(["src", "dst"]),
         "graph_kcore_parts_x2rounds": lambda s, d: kcore_parts(
             s, d, 2 * _KCORE_ROUNDS
         ),

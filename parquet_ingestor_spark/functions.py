@@ -23,6 +23,22 @@ def ts_lit(df: DataFrame, col: str, value: str) -> Column:
     return F.lit(value).cast(dtype)
 
 
+def disc_price() -> Column:
+    """``l_extendedprice * (1 - l_discount)`` as an exact DECIMAL.
+
+    Both factors are 2-dp values (cents, whole percents), so casting
+    each to ``DECIMAL(15,2)`` is lossless and the product and its sum
+    stay exact (scale 4). A DOUBLE sum can land within float noise of
+    a half cent, where ``round(sum * 100)`` then depends on the
+    summation order and the two engines disagree by one. Oracle-side
+    twin: ``CAST(l_extendedprice AS DECIMAL(15,2)) * (1 -
+    CAST(l_discount AS DECIMAL(15,2)))``.
+    """
+    return F.col("l_extendedprice").cast("decimal(15,2)") * (
+        1 - F.col("l_discount").cast("decimal(15,2)")
+    )
+
+
 def int_e(col: str | Column, d: int) -> Column:
     """Engine-exact integer quantization: value × 10^d, rounded
     half-away-from-zero, emitted as BIGINT.

@@ -538,11 +538,11 @@ def asof_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return lags.agg(
         F.count("*").alias("n_conversions"),
-        (F.percentile(F.col("lag_us"), F.lit(0.5)) / 1000000.0).alias(
-            "p50_s"
-        ),
-        (F.percentile(F.col("lag_us"), F.lit(0.9)) / 1000000.0).alias(
-            "p90_s"
-        ),
+        F.percentile("lag_us", [0.5, 0.9]).alias("p"),
         F.max("lag_us").alias("max_lag_us"),
+    ).select(
+        "n_conversions",
+        (F.col("p")[0] / 1000000.0).alias("p50_s"),
+        (F.col("p")[1] / 1000000.0).alias("p90_s"),
+        "max_lag_us",
     )

@@ -20,24 +20,26 @@ runs, which is what lets a fixed-iteration DuckDB CTE chain
 hash-verify the whole computation (float PageRank could only ever be
 tolerance-checked).
 
-Scale notes: one iteration = one join of the rank table against the
-edge list (rank side is node-cardinality — AQE broadcasts it while it
-fits, falls back to a keyed shuffle join when nodes outgrow memory;
-no hints) plus one map-side-combinable sum keyed on dst. The edge
-list is hash-partitioned on the join key, sorted within partitions,
-and CACHED once up front — a cached relation keeps its partitioning
+Scale notes: one iteration = one sort-merge join of the node-sized
+rank table against the edge list plus one map-side-combinable sum
+keyed on dst. The edge table ``(src, dst, outdeg)`` is built behind
+ONE exchange on ``src``: the co-purchase entry shuffles one row per
+basket member (the part and its order's part set), not one per
+directed pair, and after the exchange the self-edge drop, a single
+dedup and the out-degree are windows over one ``(src, dst)`` sort —
+no degree ``groupBy``, no second dedup, no broadcast join. The table
+is CACHED once up front — a cached relation keeps its partitioning
 and ordering, so every round's join reads the edge side with no
-Exchange and no Sort (localCheckpoint lost both: its Scan ExistingRDD
-reports UnknownPartitioning, which re-shuffled the whole edge list
-every round — the r5 verdict's one efficiency finding). Rank lineage
-is truncated every ``checkpoint_interval`` rounds so the plan stays
-bounded at any iteration count.
+Exchange and no Sort (a localCheckpoint's Scan ExistingRDD reports
+UnknownPartitioning, which would re-shuffle the whole edge list every
+round). Rank lineage is truncated every ``checkpoint_interval`` rounds
+so the plan stays bounded at any iteration count.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import table
 from ..checkpointing import truncate_lineage
@@ -71,63 +73,82 @@ def pagerank_tokens(
 
     Returns ``(node, tokens)`` — exact BIGINT, deterministic.
     ``edges_canonical=True`` skips the self-loop/duplicate scrub when
-    the caller already guarantees it (saves one full-edge-set shuffle
-    — the mining path below dedups the cheaper undirected half).
+    the caller already guarantees it. The edge table is built by
+    :func:`_edge_table` behind one ``src`` exchange.
     """
-    e = edges.select("src", "dst")
+    by_src = edges.select("src", "dst").repartition(_partitions(edges), "src")
+    return _rank_rounds(
+        _edge_table(by_src, scrub=not edges_canonical),
+        iterations,
+        checkpoint_dir,
+        checkpoint_interval,
+        release_cache,
+    )
+
+
+def _partitions(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _edge_table(by_src: DataFrame, scrub: bool) -> DataFrame:
+    """``(src, dst, outdeg)`` from ``(src, dst)`` rows that are already
+    hash-partitioned on ``src``: no further exchange.
+
+    The scrub drops self-loops and deduplicates with
+    ``lag(dst) OVER (PARTITION BY src ORDER BY dst)`` — a row survives
+    when it differs from its predecessor — and ``outdeg`` is
+    ``count(*) OVER (PARTITION BY src)``. Both windows run on ONE sort
+    of ``(src, dst)``; no hash aggregate, no degree ``groupBy`` and no
+    degree join. The output keeps the ``src`` hash partitioning and
+    ``src`` ordering, which is what the rounds' merge join needs.
+    """
+    e = by_src
+    if scrub:
+        prev = F.lag("dst").over(Window.partitionBy("src").orderBy("dst"))
+        e = (
+            e.where(F.col("src") != F.col("dst"))
+            .select("src", "dst", prev.alias("prev"))
+            .where(F.col("prev").isNull() | (F.col("prev") != F.col("dst")))
+        )
+    return e.select(
+        "src",
+        "dst",
+        F.count("*").over(Window.partitionBy("src")).alias("outdeg"),
+    )
+
+
+def _rank_rounds(
+    e: DataFrame,
+    iterations: int,
+    checkpoint_dir: str | None,
+    checkpoint_interval: int,
+    release_cache: bool,
+) -> DataFrame:
+    """Run ``iterations`` rounds over the ``(src, dst, outdeg)`` table."""
     if checkpoint_dir is None:
-        # Iteration-reuse shape (r5 verdict #4) built through ONE
-        # exchange (r8 verdict #6): hash-partition the RAW pair
-        # stream on the per-round join key FIRST — the self-loop/
-        # duplicate scrub, the degree count, and the degree join all
-        # ride that partitioning (src is a subset of each operation's
-        # keys, and the deg branch reuses the same shuffle stage), so
-        # the mining job runs once with no eager checkpoint and no
-        # double-read. The degree-annotated table is then CACHED
-        # pre-sorted: a cached relation keeps its outputPartitioning/
-        # outputOrdering, so every round's SortMergeJoin reads the
-        # edge side with NO Exchange and NO Sort — only the
-        # node-sized rank table moves per round. localCheckpoint (the
-        # old shape) came back as a Scan ExistingRDD with
-        # UnknownPartitioning, forcing a fresh src exchange + sort of
-        # the whole edge list EVERY round (PLANS.md pagerank steps
-        # (1)-(2)); that cost was linear in iterations and pure waste
-        # at 100 TB edge scale.
-        par = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        if not edges_canonical:
-            e = e.where(F.col("src") != F.col("dst"))
-        e = e.repartition(par, "src")
-        if not edges_canonical:
-            e = e.dropDuplicates(["src", "dst"])
-        deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-        e = e.join(deg, "src").sortWithinPartitions("src").persist()
+        # CACHED, not checkpointed: a cached relation keeps its
+        # outputPartitioning/outputOrdering, so every round's
+        # SortMergeJoin reads the edge side with NO Exchange and NO
+        # Sort — only the node-sized rank table moves per round. A
+        # localCheckpoint comes back as a Scan ExistingRDD with
+        # UnknownPartitioning, which re-shuffles and re-sorts the whole
+        # edge list every round.
+        e = e.persist()
         e.count()  # materialize once; rounds reuse the cached blocks
-        # rank init reads the CACHED edge table (src is distinct per
-        # partition already) — deriving it from the pre-cache deg
-        # lineage would re-run the mining job for one throwaway scan
-        ranks = (
-            e.select("src")
-            .dropDuplicates(["src"])
-            .select(
-                F.col("src").alias("node"),
-                F.lit(SCALE).cast("bigint").alias("tokens"),
-            )
-        )
     else:
         # Reliable-checkpoint mode trades the partition reuse for
         # fault tolerance across driver restarts (restart tests).
-        if not edges_canonical:
-            e = e.where(F.col("src") != F.col("dst")).dropDuplicates(
-                ["src", "dst"]
-            )
-        deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-        e = truncate_lineage(e.join(deg, "src"), checkpoint_dir, eager=True)
-        ranks = deg.select(
+        e = truncate_lineage(e, checkpoint_dir, eager=True)
+    # rank init reads the MATERIALIZED edge table — deriving it from
+    # the build lineage would re-run the mining job for one scan
+    ranks = (
+        e.select("src")
+        .dropDuplicates(["src"])
+        .select(
             F.col("src").alias("node"),
             F.lit(SCALE).cast("bigint").alias("tokens"),
         )
+    )
     for i in range(1, iterations + 1):
         # SHUFFLE_MERGE pins the scale-correct join: the cached edge
         # side satisfies the SMJ's partitioning+ordering requirement
@@ -271,31 +292,29 @@ def pagerank_parts(
     bench.py runs it at 2× the registered iterations to demonstrate
     cost grows LINEARLY in rounds (the lineage-truncation contract:
     per-round plans stay constant-size, so wall time per extra round
-    is flat)."""
-    # mirror each mined pair occurrence INSIDE the mining row (a
-    # 2-element explode) instead of union-ing two branches over an
-    # eagerly checkpointed deduped half (r8 verdict #6): the mining
-    # job runs once with no checkpoint materialization, and the raw
-    # directed stream rides pagerank_tokens' single src exchange,
-    # where the duplicate scrub and degree count fold into the same
-    # partitioning (u < v guarantees src <> dst; cross-order
-    # duplicates survive to that scrub by design).
-    edges = (
-        order_copair_stream(spark, sf_dir)
-        .select(
-            F.explode(
-                F.expr(
-                    "array(struct(u AS src, v AS dst), "
-                    "struct(v AS src, u AS dst))"
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
+    is flat).
+
+    The edge table comes from ONE basket-member exchange: each
+    ``(order, collect_set(part))`` basket row fans out to one row per
+    member, ``(src = part, ps = the basket)``, which is shuffled on
+    ``src`` — one record per basket member instead of one per
+    directed pair (3.4x fewer at sf0.1). After the exchange ``ps``
+    explodes into ``dst`` and :func:`_edge_table` drops the self-edge,
+    deduplicates and counts ``outdeg`` on the same partitioning."""
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    members = (
+        li.groupBy("l_orderkey")
+        .agg(F.collect_set("l_partkey").alias("ps"))
+        .select(F.explode("ps").alias("src"), "ps")
+        .repartition(_partitions(li), "src")
     )
-    ranks = pagerank_tokens(
-        edges,
-        iterations=iterations,
-        edges_canonical=False,
+    ranks = _rank_rounds(
+        _edge_table(
+            members.select("src", F.explode("ps").alias("dst")), scrub=True
+        ),
+        iterations,
+        checkpoint_dir=None,
+        checkpoint_interval=4,
         release_cache=release_cache,
     )
     return ranks.select(

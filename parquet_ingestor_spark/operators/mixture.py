@@ -421,9 +421,10 @@ def corpus_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds may be approximate.
     """
     docs = table(spark, sf_dir, "documents")
-    stats = docs.groupBy("lang").agg(
-        F.percentile("n_chars", QUANTILE_LO).alias("p_lo"),
-        F.percentile("n_chars", QUANTILE_HI).alias("p_hi"),
+    stats = (
+        docs.groupBy("lang")
+        .agg(F.percentile("n_chars", [QUANTILE_LO, QUANTILE_HI]).alias("p"))
+        .select("lang", F.col("p")[0].alias("p_lo"), F.col("p")[1].alias("p_hi"))
     )
     return (
         docs.join(F.broadcast(stats), "lang")  # rows = #langs, bounded

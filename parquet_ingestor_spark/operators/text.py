@@ -1036,9 +1036,8 @@ def text_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_lm_perplexity(spark, sf_dir).select("doc_id", "avg_nll_e4"),
     )
     th = ppl.agg(
-        F.percentile("avg_nll_e4", 1.0 / 3).alias("t1"),
-        F.percentile("avg_nll_e4", 2.0 / 3).alias("t2"),
-    )
+        F.percentile("avg_nll_e4", [1.0 / 3, 2.0 / 3]).alias("t")
+    ).select(F.col("t")[0].alias("t1"), F.col("t")[1].alias("t2"))
     bucket = (
         F.when(F.col("avg_nll_e4") <= F.col("t1"), F.lit("head"))
         .when(F.col("avg_nll_e4") <= F.col("t2"), F.lit("middle"))

@@ -140,7 +140,13 @@ def write_batch(
     commit-batch-then-ack ordering (ingestor/ingestor.go:569-609).
     """
     cfg = cfg or PipelineConfig()
-    good = good.withColumn("batch_id", F.lit(batch_id))
+    # A STRING literal: codegen passes it to the generated class by
+    # reference, where an int literal is inlined into the Java source,
+    # so every new batch id would compile new classes (and churn the
+    # codegen cache). The partition directory is `batch_id=N` either
+    # way, and readers still infer an int.
+    stamp = F.lit(str(batch_id))
+    good = good.withColumn("batch_id", stamp)
     ts = cfg.timestamp_col
     if cfg.key_exprs:
         # user-supplied KeyFunc (reference: ingestor/ingestor.go:23-29):
@@ -161,7 +167,7 @@ def write_batch(
         .parquet(data_dir)
     )
     (
-        bad.withColumn("batch_id", F.lit(batch_id))
+        bad.withColumn("batch_id", stamp)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")

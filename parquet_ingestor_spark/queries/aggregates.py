@@ -76,7 +76,9 @@ def q35_stats_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY o_orderpriority
     """,
     doc="Exact continuous percentiles (Spark percentile ≡ DuckDB "
-    "quantile_cont). Exact needs the full group in memory — see "
+    "quantile_cont), all three from ONE array-valued percentile "
+    "aggregate: one value→count buffer per group, not one per "
+    "percentage. Exact needs the full group in memory — see "
     "q37_approx_percentiles for the sketch-based scale path.",
     tags=("relational", "aggregate", "stats"),
 )
@@ -84,10 +86,12 @@ def q36_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
-        .agg(
-            int_e(F.percentile("o_totalprice", 0.5), 2).alias("p50_e2"),
-            int_e(F.percentile("o_totalprice", 0.9), 2).alias("p90_e2"),
-            int_e(F.percentile("o_totalprice", 0.99), 2).alias("p99_e2"),
+        .agg(F.percentile("o_totalprice", [0.5, 0.9, 0.99]).alias("p"))
+        .select(
+            "o_orderpriority",
+            int_e(F.col("p")[0], 2).alias("p50_e2"),
+            int_e(F.col("p")[1], 2).alias("p90_e2"),
+            int_e(F.col("p")[2], 2).alias("p99_e2"),
         )
         .orderBy("o_orderpriority")
     )

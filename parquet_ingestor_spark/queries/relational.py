@@ -23,7 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import table
-from ..functions import int_e, ts_lit
+from ..functions import disc_price, int_e, ts_lit
 from . import register
 
 
@@ -58,8 +58,9 @@ def q09_join_groupcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q10_revenue_per_nation",
     oracle="""
         SELECT n.n_name,
-               CAST(round(SUM(l.l_extendedprice * (1 - l.l_discount)) * 100)
-                    AS BIGINT) AS revenue_e2,
+               CAST(round(SUM(CAST(l.l_extendedprice AS DECIMAL(15,2))
+                              * (1 - CAST(l.l_discount AS DECIMAL(15,2))))
+                          * 100) AS BIGINT) AS revenue_e2,
                CAST(COUNT(*) AS BIGINT) AS cnt
         FROM region r
         JOIN nation n   ON n.n_regionkey = r.r_regionkey
@@ -75,7 +76,8 @@ def q09_join_groupcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY revenue_e2 DESC, n_name
     """,
     doc="TPC-H Q5 local-supplier-volume 6-way multi-join: region filter, "
-    "date range, supplier nation = customer nation.",
+    "date range, supplier nation = customer nation; revenue summed as "
+    "exact DECIMAL, so half-cent totals round the same in both engines.",
     tags=("relational", "join", "flagship"),
 )
 def q10_revenue_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,9 +123,7 @@ def q10_revenue_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("n_name")
         .agg(
-            int_e(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue_e2"),
+            int_e(F.sum(disc_price()), 2).alias("revenue_e2"),
             F.count("*").alias("cnt"),
         )
         .orderBy(F.desc("revenue_e2"), "n_name")
@@ -272,8 +272,9 @@ def q14_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(round(SUM(l_quantity) * 100) AS BIGINT) AS sum_qty_e2,
                CAST(round(SUM(l_extendedprice) * 100) AS BIGINT)
                    AS sum_base_price_e2,
-               CAST(round(SUM(l_extendedprice * (1 - l_discount)) * 100)
-                   AS BIGINT) AS sum_disc_price_e2,
+               CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(15,2))
+                              * (1 - CAST(l_discount AS DECIMAL(15,2))))
+                          * 100) AS BIGINT) AS sum_disc_price_e2,
                CAST(round(AVG(l_discount) * 10000) AS BIGINT) AS avg_disc_e4,
                CAST(COUNT(*) AS BIGINT) AS count_order
         FROM lineitem
@@ -281,7 +282,8 @@ def q14_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus
     """,
-    doc="TPC-H Q1-shaped full-scan hash aggregate (map-side partials).",
+    doc="TPC-H Q1-shaped full-scan hash aggregate (map-side partials); "
+    "the discounted price is summed as exact DECIMAL.",
     tags=("relational", "aggregate", "flagship"),
 )
 def q15_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -294,9 +296,7 @@ def q15_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             int_e(F.sum("l_quantity"), 2).alias("sum_qty_e2"),
             int_e(F.sum("l_extendedprice"), 2).alias("sum_base_price_e2"),
-            int_e(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price_e2"),
+            int_e(F.sum(disc_price()), 2).alias("sum_disc_price_e2"),
             int_e(F.avg("l_discount"), 4).alias("avg_disc_e4"),
             F.count("*").alias("count_order"),
         )

@@ -607,9 +607,16 @@ def q78_shipping_lag_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_lines"),
             F.min("lag_days").cast("long").alias("min_lag"),
-            int_e(F.expr("percentile(lag_days, 0.5)"), 2).alias("p50_lag_e2"),
-            int_e(F.expr("percentile(lag_days, 0.9)"), 2).alias("p90_lag_e2"),
+            F.percentile("lag_days", [0.5, 0.9]).alias("p"),
             F.max("lag_days").cast("long").alias("max_lag"),
+        )
+        .select(
+            "o_orderpriority",
+            "n_lines",
+            "min_lag",
+            int_e(F.col("p")[0], 2).alias("p50_lag_e2"),
+            int_e(F.col("p")[1], 2).alias("p90_lag_e2"),
+            "max_lag",
         )
         .orderBy("o_orderpriority")
     )
@@ -666,8 +673,13 @@ def q79_interevent_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         gaps.groupBy("event_type")
         .agg(
             F.count("gap_s").alias("n_gaps"),
-            int_e(F.expr("percentile(gap_s, 0.5)"), 2).alias("p50_gap_s_e2"),
-            int_e(F.expr("percentile(gap_s, 0.9)"), 2).alias("p90_gap_s_e2"),
+            F.percentile("gap_s", [0.5, 0.9]).alias("p"),
+        )
+        .select(
+            "event_type",
+            "n_gaps",
+            int_e(F.col("p")[0], 2).alias("p50_gap_s_e2"),
+            int_e(F.col("p")[1], 2).alias("p90_gap_s_e2"),
         )
         .orderBy("event_type")
     )

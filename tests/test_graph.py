@@ -83,6 +83,19 @@ def test_determinism_across_partitionings(spark):
         assert rep == base
 
 
+def test_reliable_checkpoint_mode_matches_cached_mode(spark, tmp_path):
+    """Both edge-table materializations (cached, reliable checkpoint)
+    run the same build and rounds, so they return identical tokens."""
+    noisy = _sym(spark, [(1, 2), (1, 2), (2, 3), (3, 4), (4, 1)]).unionByName(
+        _sym(spark, [(2, 2)])
+    )
+    cached = sorted(tuple(r) for r in pagerank_tokens(noisy, iterations=3).collect())
+    ckpt = pagerank_tokens(
+        noisy, iterations=3, checkpoint_dir=str(tmp_path / "ckpt"), checkpoint_interval=2
+    )
+    assert sorted(tuple(r) for r in ckpt.collect()) == cached
+
+
 def test_interval_bin_join_boundaries(spark):
     """lo inclusive, hi exclusive, no duplicate matches across bins
     (each probe row lives in exactly one bin)."""

@@ -329,3 +329,37 @@ def test_adaptive_controller_retunes_ingest_across_restart(spark, dirs):
     # the controller saw real progress and kept its setting in-bounds
     assert ctl.lo <= ctl.current <= ctl.hi
     assert new_setting is None or ctl.lo <= new_setting <= ctl.hi
+
+
+def _compiled_classes(spark) -> int:
+    """Whole-stage/expression classes janino has compiled in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_fresh_batch_ids_compile_no_new_classes(spark, tmp_path):
+    """The batch id is stamped as a value codegen passes by reference,
+    not one it inlines into the generated Java: once a drain has
+    compiled the commit's classes, a drain that reaches batch ids never
+    seen before compiles nothing new (an inlined int literal compiled
+    fresh classes on every trigger of a long-running stream)."""
+    cfg = PipelineConfig(flush_interval="0 seconds", max_files_per_trigger=1)
+
+    def drain(files: int, name: str) -> None:
+        landing = str(tmp_path / f"landing-{name}")
+        os.makedirs(landing)
+        for i in range(files):
+            _write_landing_file(landing, f"f{i}.json", 20, bad_every=5, offset=100 * i)
+        q = start_stream_ingest(
+            spark, landing, str(tmp_path / f"out-{name}"),
+            str(tmp_path / f"chk-{name}"), RECORD_SCHEMA, cfg,
+        )
+        _run_until_drained(q)
+
+    drain(1, "warm")  # batch id 0
+    before = _compiled_classes(spark)
+    drain(3, "fresh")  # batch ids 0-2: 1 and 2 are new to the commit
+    assert _compiled_classes(spark) - before == 0
+    out = spark.read.parquet(str(tmp_path / "out-fresh" / "data"))
+    assert dict(out.dtypes)["batch_id"] == "int"
+    assert sorted(r.batch_id for r in out.select("batch_id").distinct().collect()) == [0, 1, 2]

@@ -753,6 +753,63 @@ def test_pagerank_rounds_reuse_cached_edge_partitioning(spark, sf_dir):
         assert "Sort [src" not in first_child, first_child
 
 
+def _subtree(plan: str, marker: str) -> str:
+    """The lines of the plan node whose line contains ``marker`` and of
+    everything printed below it (deeper indentation)."""
+    lines = plan.splitlines()
+    i = next(k for k, ln in enumerate(lines) if marker in ln)
+    col = lines[i].index(marker)
+    out = [lines[i]]
+    for ln in lines[i + 1 :]:
+        if len(ln) - len(ln.lstrip(" :|+-")) <= col:
+            break
+        out.append(ln)
+    return "\n".join(out)
+
+
+def test_pagerank_edge_build_one_member_exchange_one_dedup(spark, sf_dir):
+    """The cached edge table is built behind ONE src-keyed exchange of
+    basket members (one row per order member, not per directed pair),
+    placed above the basket aggregation; the self-edge drop, the dedup
+    and the out-degree then run on that partitioning: one lag-window
+    dedup, a window degree, no degree groupBy and no broadcast join."""
+    from parquet_ingestor_spark.operators.graph import (
+        _PAGERANK_ITERS,
+        pagerank_parts,
+    )
+
+    df = pagerank_parts(
+        spark, sf_dir, _PAGERANK_ITERS, release_cache=False
+    )
+    df.collect()  # finalize AQE
+    final = df._jdf.queryExecution().executedPlan().toString()
+    build = _subtree(final.split("== Initial Plan ==")[0], "InMemoryRelation")
+    src_exchanges = [
+        ln for ln in build.splitlines() if "Exchange hashpartitioning(src" in ln
+    ]
+    assert len(src_exchanges) == 1, src_exchanges
+    # printed top-down: the src exchange sits above the basket collect_set
+    assert build.index("Exchange hashpartitioning(src") < build.index(
+        "collect_set("
+    )
+    assert "BroadcastExchange" not in build
+    assert "BroadcastHashJoin" not in build
+    assert build.count("lag(dst") == 1  # the one dedup
+    assert "HashAggregate(keys=[src" not in build  # no hash dedup/degree
+    assert build.count("Window [count(1)") == 1  # the window degree
+
+
+def test_q36_percentiles_one_percentile_aggregate(spark, sf_dir):
+    """All three percentages come from ONE array-valued percentile: one
+    value->count buffer per group (three scalar percentiles over the
+    same column kept three)."""
+    import re
+
+    plan = plan_of(spark, sf_dir, "q36_percentiles")
+    final_aggs = re.findall(r"(?<!partial_)percentile\(", plan)
+    assert len(final_aggs) == 1, final_aggs
+
+
 def test_hist_quantile_sketch_scans_corpus_once(spark, sf_dir):
     """The histogram-quantile sketch's total-count comes from a second
     window over the SAME key partitioning as the cumsum — never a

@@ -41,7 +41,7 @@ SHOW = {
     "q70_forecast_revenue": "TPC-H Q6 shape: single scan, all predicates pushed, one exchange total",
     "q71_returned_items": "TPC-H Q10 shape: agg before dim join-back, integer-cents revenue, TakeOrdered top-20",
     "corpus_dsir_weights": "DSIR: one gram explode, models folded via exchange reuse, 1024-row log-ratio broadcast",
-    "graph_pagerank": "PageRank: basket-mined edges (one orderkey shuffle), cached pre-sorted edge table (per-round SMJ with no exchange/sort), per-round keyed join + partial-agg sum",
+    "graph_pagerank": "PageRank: basket-mined edges (one orderkey shuffle, then one src exchange of basket members; lag-window dedup and window out-degree on one sort), cached pre-sorted edge table (per-round SMJ with no exchange/sort), per-round keyed join + partial-agg sum",
     "graph_triangles": "Triangle census: degree-oriented per-edge neighborhood intersection, O(m)-row shuffles only",
     "interval_join_binned": "Interval-overlap join: bin-bucketed keyed equi-join with [lo,hi) residual, no NLJ",
     "q86_association_rules": "Association rules: ONE truncated basket frame (groupBy+collect_set), in-row pair expansion, stats-sized support join-backs",
