@@ -71,7 +71,6 @@ HEADLINE = (
     "text_zipf_fit",
     "q71_returned_items",
     "corpus_dsir_weights",
-    "corpus_dsir_weights_fast",
     "graph_pagerank",
     "graph_triangles",
     "interval_join_binned",
@@ -90,9 +89,6 @@ HEADLINE = (
     "graph_kcore_parts",
     "graph_link_scores",
 )
-# corpus_dsir_weights (md5 feature hashing) is the oracle twin the
-# driver gate checks; _fast (xxhash64) is what production runs — both
-# stay under bench watch so the twins can't silently diverge in cost.
 # HEADLINE ENTRIES TIME THE PRODUCTION PATHS (round-7 verdict #2):
 # for the four entries whose registered md5/expression twins carry an
 # oracle-verifiability tax that exceeded 1.5x of the production probe
@@ -628,7 +624,7 @@ def main() -> None:
         "spin_flagged": len(spin_flagged),
         "spin_flagged_top": [n for _, n in spin_flagged[:2]],
     }
-    # compact separators + 2-decimal per-query values: the 61-entry
+    # compact separators + 2-decimal per-query values: the 60-entry
     # line measures ~1.7k chars, safely inside the driver's 2000-char
     # tail capture (full-precision timings are in bench_detail.json)
     line = json.dumps(out, separators=(",", ":"))

@@ -1,4 +1,5 @@
-"""Lineage truncation for iterative operators.
+"""Lineage truncation for iterative operators, and the epoch-state
+fold for streaming ones.
 
 Driver-side loops (connected components, star contraction, BPE merge
 training) rebuild a DataFrame each round; without truncation the plan
@@ -14,15 +15,26 @@ Two truncation modes:
   iterative jobs at 100 TB, at the cost of a filesystem round-trip
   per round.
 
-Mirrors the reference's durable-before-ack stance for state the
+Streaming operators that fold each micro-batch into accumulated
+state (sketches, SCD2, views, dedup clusters) run through
+:func:`start_epoch_fold`, the one owner of the replay-safe
+``epoch=N`` state protocol.
+
+Both mirror the reference's durable-before-ack stance for state the
 pipeline cannot afford to recompute (reference ingestor commit path:
-``ingestor/ingestor.go`` ack-after-write), applied to iterative
-operator state.
+``ingestor/ingestor.go`` ack-after-write), applied to operator state.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+from collections.abc import Callable, Generator
+from functools import partial
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 #: The checkpoint dir last set through this module. SparkContext holds
 #: ONE checkpoint dir: with ``eager=False`` the checkpoint
@@ -37,29 +49,94 @@ from pyspark.sql import DataFrame
 _LAST_CHECKPOINT_DIR: str | None = None
 
 
+def _epochs(path: str) -> list[int]:
+    """Ids of the well-formed ``epoch=<digits>`` directories under
+    ``path`` (none if ``path`` is absent). A stray temp/staging entry
+    containing '=' is skipped rather than raising ValueError inside
+    foreachBatch and failing the micro-batch."""
+    if not os.path.isdir(path):
+        return []
+    return [
+        int(n)
+        for name, _, n in (d.partition("=") for d in os.listdir(path))
+        if name == "epoch" and n.isdecimal()
+    ]
+
+
+def _epoch_path(path: str, epoch: int) -> str:
+    return os.path.join(path, f"epoch={epoch}")
+
+
 def latest_epoch_below(path: str, bound: int) -> int:
     """Largest ``epoch=N`` directory under ``path`` strictly below
-    ``bound`` (-1 if none) — the replay-safe state floor for epoch-
-    keyed foreachBatch state: a replayed batch re-reads the same
-    pre-state and overwrites its own epoch, never double-folding.
+    ``bound`` (-1 if none): the pre-state a batch with id ``bound``
+    folds into under :func:`start_epoch_fold`."""
+    return max((e for e in _epochs(path) if e < bound), default=-1)
 
-    Only well-formed ``epoch=<digits>`` entries count; a stray
-    temp/staging directory containing '=' is ignored rather than
-    raising ValueError inside foreachBatch and failing the
-    micro-batch. Shared by every epoch-keyed stream maintainer
-    (sketches/scd/matview/mixture/incremental)."""
-    import os
 
-    if not os.path.isdir(path):
-        return -1
-    vs = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("epoch=")
-        and d.split("=", 1)[1].isdigit()
-        and int(d.split("=", 1)[1]) < bound
-    ]
-    return max(vs, default=-1)
+def start_epoch_fold(
+    stream_df: DataFrame,
+    state_dir: str,
+    reads: tuple[str, ...],
+    fold: Callable[
+        ..., Generator[tuple[str, DataFrame], Callable[[], DataFrame], None]
+    ],
+    query_name: str,
+) -> StreamingQuery:
+    """Maintain epoch-keyed parquet state under ``state_dir`` from
+    ``stream_df`` with a ``foreachBatch`` query that drains what is
+    available now (checkpoint at ``state_dir/_checkpoint``), and return
+    it started; callers own awaitTermination/stop.
+
+    The protocol is the streaming form of the reference's ack-after-
+    write rule (``ingestor/ingestor.go``): state lives at
+    ``state_dir/<sub>/epoch=N``, N the streaming batch_id that wrote
+    it. A batch reads the newest epoch STRICTLY below its own id and
+    overwrites ``epoch=batch_id``, so when Structured Streaming replays
+    a batch whose writes landed but whose commit did not, the replay
+    folds into the same pre-state and rewrites the same files instead
+    of folding itself in twice. An empty micro-batch writes nothing.
+
+    ``fold(batch_df, *prior)`` gets one DataFrame per name in ``reads``
+    (all ``None`` before the first epoch) and is a generator of
+    ``(sub, df)`` outputs. Each output is written to
+    ``sub/epoch=batch_id`` before the fold resumes, and the ``yield``
+    evaluates to a zero-argument function that reads it back. The
+    epoch is taken from the last name in ``reads``, so a fold with
+    several state outputs must yield that one last: its presence marks
+    the epoch complete in every subdirectory.
+    """
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        batch_id = int(batch_id)
+        e = latest_epoch_below(os.path.join(state_dir, reads[-1]), batch_id)
+        prior = [
+            spark.read.parquet(_epoch_path(os.path.join(state_dir, sub), e))
+            if e >= 0
+            else None
+            for sub in reads
+        ]
+        outputs = fold(batch_df, *prior)
+        read_back = None
+        while True:
+            try:
+                sub, df = outputs.send(read_back)
+            except StopIteration:
+                return
+            path = _epoch_path(os.path.join(state_dir, sub), batch_id)
+            df.write.mode("overwrite").parquet(path)
+            read_back = partial(spark.read.parquet, path)
+
+    return (
+        stream_df.writeStream.foreachBatch(_process)
+        .queryName(query_name)
+        .option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def truncate_lineage(
@@ -110,8 +187,8 @@ def truncate_lineage(
 
 def gc_epoch_state(state_path: str, keep_last: int = 2) -> list[int]:
     """Retention for epoch-keyed streaming state directories
-    (``.../epoch=N`` parquet written by ``stream_hll_users``,
-    ``stream_scd2``, ``stream_dsir_weights``, …): delete all but the
+    (``.../epoch=N`` parquet written through :func:`start_epoch_fold`
+    by ``stream_hll_users``, ``stream_scd2``, …): delete all but the
     newest ``keep_last`` epochs and return the removed epoch ids.
 
     Why ``keep_last >= 2`` is the floor: a replayed micro-batch reads
@@ -123,25 +200,14 @@ def gc_epoch_state(state_path: str, keep_last: int = 2) -> list[int]:
     Local-filesystem paths only, mirroring compact_parquet's guard —
     object stores do retention with lifecycle rules.
     """
-    import shutil
-    from urllib.parse import urlparse
-
     if urlparse(state_path).scheme not in ("", "file"):
         raise ValueError(
             f"gc_epoch_state handles local paths only, got {state_path!r}"
         )
     if keep_last < 2:
         raise ValueError("keep_last must be >= 2 (replay needs pre-state)")
-    import os
-
-    if not os.path.isdir(state_path):
-        return []
-    epochs = sorted(
-        int(d.split("=")[1])
-        for d in os.listdir(state_path)
-        if d.startswith("epoch=") and d.split("=")[1].isdigit()
-    )
+    epochs = sorted(_epochs(state_path))
     doomed = epochs[:-keep_last] if len(epochs) > keep_last else []
     for e in doomed:
-        shutil.rmtree(os.path.join(state_path, f"epoch={e}"))
+        shutil.rmtree(_epoch_path(state_path, e))
     return doomed

@@ -987,11 +987,11 @@ def _simhash_md5_oracle() -> str:
     "2×60-bit fingerprints from the two md5 halves (full SQL oracle — "
     "promoted from rows-only: fingerprints, banding, candidates and "
     "hamming all hash-verified); production callers keep the "
-    "2×63-bit xxhash64 fast path via simhash_pairs' default hasher "
-    "(the corpus_dsir_weights/_fast twin rule). The oracle mirrors "
-    "the DIRECT routing path, which the distinct-ratio probe selects "
-    "on the gate corpus (pinned by the routing tests); the rep path "
-    "is output-equivalent by the routing-equivalence test.",
+    "2×63-bit xxhash64 fast path via simhash_pairs' default hasher. "
+    "The oracle mirrors the DIRECT routing path, which the "
+    "distinct-ratio probe selects on the gate corpus (pinned by the "
+    "routing tests); the rep path is output-equivalent by the "
+    "routing-equivalence test.",
     tags=("dedup", "approx"),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

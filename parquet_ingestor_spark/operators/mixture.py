@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import types as T
 
 from ..catalog import table
+from ..checkpointing import start_epoch_fold, truncate_lineage
 from ..functions import int_e
 from ..queries import register
 
@@ -573,8 +574,6 @@ def mg_merge_batch(
     candidates); lineage is truncated per fold so the plan does not
     grow with the number of batches.
     """
-    from ..checkpointing import truncate_lineage
-
     batch_sum = (
         batch_docs.select(F.col(text_col).alias("text"))
         .mapInPandas(_mg_summaries(capacity), schema=_MG_SCHEMA)
@@ -693,16 +692,13 @@ def stream_heavy_hitters(
     state_dir: str,
     text_col: str = "text",
     capacity: int = HH_CAPACITY,
-    query_name: str = "heavy_hitters_maintenance",
 ):
     """Structured-Streaming wrapper: maintain the mergeable MG
-    summary from a streaming (doc_id, text) source via
-    ``foreachBatch``. Same epoch discipline as
-    :func:`~.incremental.stream_dedup_clusters`: state parquet under
-    ``state_dir`` (summary/, total/) keyed by streaming batch_id, a
-    batch reads the largest epoch STRICTLY below its own id, so a
-    crash-replay re-reads the same pre-state and overwrites the same
-    epoch instead of double-counting (replay-idempotent).
+    summary from a streaming (doc_id, text) source through
+    :func:`~..checkpointing.start_epoch_fold`, as ``summary/`` and
+    ``total/`` state. Summary counts and the token total are integer
+    sums, so the epoch protocol is what keeps a replayed batch from
+    counting twice.
 
     ``summary/<latest>`` is queryable at any moment: every token with
     true stream frequency > n_total/(capacity+1) is present, counts
@@ -712,42 +708,21 @@ def stream_heavy_hitters(
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
-
-    def _epoch_below(sub: str, bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, sub), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below("summary", int(batch_id))
-        state = None
-        if e >= 0:
-            state = tuple(
-                spark.read.parquet(
-                    os.path.join(state_dir, sub, f"epoch={e}")
-                )
-                for sub in ("summary", "total")
-            )
+    def _fold(batch_df: DataFrame, summary, total):
+        state = None if total is None else (summary, total)
         summary, total = mg_merge_batch(
             state, batch_df, capacity=capacity, text_col=text_col
         )
-        for sub, df in (("summary", summary), ("total", total)):
-            df.write.mode("overwrite").parquet(
-                os.path.join(state_dir, sub, f"epoch={int(batch_id)}")
-            )
+        yield "summary", summary
+        yield "total", total
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_epoch_fold(
+        stream_docs,
+        state_dir,
+        ("summary", "total"),
+        _fold,
+        "heavy_hitters_maintenance",
     )
 
 
@@ -1007,9 +982,7 @@ DSIR_ALPHA = 1.0
 DSIR_TARGET_LANG = "en"
 
 
-def _dsir_doc_buckets(
-    docs: DataFrame, buckets: int, bucket_hash: str = "xxhash64"
-) -> DataFrame:
+def _dsir_doc_buckets(docs: DataFrame, buckets: int) -> DataFrame:
     """(doc_id, lang, bucket, c): per-document hashed-feature counts.
 
     The unigram+bigram explode and the bucketing run inside the
@@ -1018,11 +991,9 @@ def _dsir_doc_buckets(
     partial-then-final count, whose per-doc output is bounded by
     min(tokens, buckets) rows.
 
-    ``bucket_hash``: ``"xxhash64"`` (default — one long hash per gram,
-    the production path, ~35% faster end-to-end at sf0.1) or ``"md5"``
-    (hex/conv string path whose buckets DuckDB can reproduce — the
-    registered oracle twin pins this). Either is a valid DSIR feature
-    hasher; only cross-engine reproducibility differs.
+    Buckets come from the first 8 hex digits of each gram's md5, a
+    feature hasher DuckDB reproduces verbatim, so the registered
+    oracle checks the same form every caller runs.
     """
     grams = F.expr(
         "flatten(transform(array(filter(split(text, ' '), w -> w != '')), "
@@ -1031,16 +1002,11 @@ def _dsir_doc_buckets(
         "i -> array_join(slice(toks, i, 2), ' ')) "
         "ELSE array() END)))"
     )
-    if bucket_hash == "xxhash64":
-        bucket = F.pmod(F.xxhash64(F.col("g")), F.lit(buckets))
-    elif bucket_hash == "md5":
-        bucket = (
-            F.conv(F.substring(F.md5(F.col("g").cast("binary")), 1, 8), 16, 10)
-            .cast("long")
-            % buckets
-        )
-    else:
-        raise ValueError(f"unknown bucket_hash {bucket_hash!r}")
+    bucket = (
+        F.conv(F.substring(F.md5(F.col("g").cast("binary")), 1, 8), 16, 10)
+        .cast("long")
+        % buckets
+    )
     return (
         docs.select("doc_id", "lang", F.explode(grams).alias("g"))
         .select("doc_id", "lang", bucket.alias("b"))
@@ -1054,7 +1020,6 @@ def dsir_logweights(
     target_lang: str = DSIR_TARGET_LANG,
     buckets: int = DSIR_BUCKETS,
     alpha: float = DSIR_ALPHA,
-    bucket_hash: str = "xxhash64",
 ) -> DataFrame:
     """Per-document DSIR importance log-weight: how target-like each
     raw document's hashed n-gram profile is.
@@ -1072,21 +1037,12 @@ def dsir_logweights(
     bucket-level re-aggregation), the log-ratio table is exactly
     ``buckets`` rows (broadcast), and the final score rides the same
     per-doc partial aggregation. Nothing driver-side, nothing
-    quadratic, no UDF. ``bucket_hash`` defaults to the fast xxhash64
-    feature hasher; the registered oracle twin pins ``"md5"`` (the
-    hasher DuckDB can mirror) — see :func:`_dsir_doc_buckets`.
+    quadratic, no UDF.
     """
-    doc_bucket = _dsir_doc_buckets(docs, buckets, bucket_hash)
-    if bucket_hash == "md5":
-        # the bucketed-gram frame feeds the model fold AND the scoring
-        # join; the md5 twin's gram hashing is expensive enough that
-        # re-deriving it per branch costs ~30% of the entry (measured
-        # 2.36 -> 1.83 s at sf0.1). The xxhash64 production path skips
-        # the truncation: its hashing is cheaper than the checkpoint
-        # materialization (measured 1.46 -> 1.69 s truncated).
-        from ..checkpointing import truncate_lineage
-
-        doc_bucket = truncate_lineage(doc_bucket)
+    # the bucketed-gram frame feeds the model fold AND the scoring
+    # join; the md5 gram hashing is expensive enough that re-deriving
+    # it per branch costs ~30% of the entry (2.36 -> 1.83 s at sf0.1).
+    doc_bucket = truncate_lineage(_dsir_doc_buckets(docs, buckets))
     per_bucket = doc_bucket.groupBy("b").agg(
         F.sum("c").alias("cq"),
         F.sum(F.when(F.col("lang") == target_lang, F.col("c")).otherwise(0)).alias(
@@ -1195,21 +1151,17 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     target. One corpus explode→count; the target and pool models fold
     from it; the 1024-row log-ratio table broadcasts back onto the
     same aggregate."""
-    return dsir_logweights(
-        table(spark, sf_dir, "documents"), bucket_hash="md5"
-    )
+    return dsir_logweights(table(spark, sf_dir, "documents"))
 
 
 def dsir_target_counts(
-    target_docs: DataFrame,
-    buckets: int = DSIR_BUCKETS,
-    bucket_hash: str = "xxhash64",
+    target_docs: DataFrame, buckets: int = DSIR_BUCKETS
 ) -> DataFrame:
     """(b, ct): the FIXED target-domain bucket counts a streaming DSIR
     scorer is configured with — computed once from the curated target
     corpus, ≤ ``buckets`` rows forever."""
     return (
-        _dsir_doc_buckets(target_docs, buckets, bucket_hash)
+        _dsir_doc_buckets(target_docs, buckets)
         .groupBy("b")
         .agg(F.sum("c").alias("ct"))
     )
@@ -1221,91 +1173,49 @@ def stream_dsir_weights(
     target_counts: DataFrame,
     buckets: int = DSIR_BUCKETS,
     alpha: float = DSIR_ALPHA,
-    bucket_hash: str = "xxhash64",
-    query_name: str = "dsir_maintenance",
 ):
     """Online DSIR: score each arriving micro-batch against the fixed
     target model and the pool model ACCUMULATED SO FAR, maintaining
-    the pool's bucket counts as epoch-keyed parquet state (the
-    heavy-hitters/HLL epoch discipline: a batch reads the largest
-    epoch strictly below its own id and overwrites its own, so a
-    crash-replay re-derives identical state — counts are exact
-    integers, so the fold is bit-idempotent).
+    the pool's bucket counts as epoch-keyed parquet state through
+    :func:`~..checkpointing.start_epoch_fold`. Pool counts are integer
+    sums, so the epoch protocol is what keeps a replayed batch from
+    counting twice; with it the replay re-derives identical state.
 
     Outputs per epoch: ``pool/epoch=N`` (b, cq — the updated model)
     and ``weights/epoch=N`` (doc_id, dsir_logweight — that batch's
-    docs scored on the updated model). Early batches score against a
-    smaller pool by construction (that IS online importance
-    estimation); re-score historical docs against ``pool/<latest>``
-    with :func:`dsir_score` when a final consistent pass is needed.
-    State is ≤ ``buckets`` integer rows regardless of stream length.
+    docs scored on the updated model, read back from its parquet).
+    Early batches score against a smaller pool by construction (that
+    IS online importance estimation); re-score historical docs
+    against ``pool/<latest>`` with :func:`dsir_score` when a final
+    consistent pass is needed. State is ≤ ``buckets`` integer rows
+    regardless of stream length.
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
-
-    def _epoch_below(bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, "pool"), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below(int(batch_id))
-        doc_bucket = _dsir_doc_buckets(batch_df, buckets, bucket_hash)
-        fresh = doc_bucket.groupBy("b").agg(F.sum("c").alias("cq"))
-        if e >= 0:
-            prior = spark.read.parquet(
-                os.path.join(state_dir, "pool", f"epoch={e}")
-            )
+    def _fold(batch_df: DataFrame, prior: DataFrame | None):
+        doc_bucket = _dsir_doc_buckets(batch_df, buckets)
+        pool = doc_bucket.groupBy("b").agg(F.sum("c").alias("cq"))
+        if prior is not None:
             pool = (
-                prior.unionByName(fresh).groupBy("b").agg(
+                prior.unionByName(pool).groupBy("b").agg(
                     F.sum("cq").alias("cq")
                 )
             )
-        else:
-            pool = fresh
-        pool.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "pool", f"epoch={int(batch_id)}")
-        )
-        pool_back = spark.read.parquet(
-            os.path.join(state_dir, "pool", f"epoch={int(batch_id)}")
-        )
-        counts = pool_back.join(target_counts, "b", "full").select(
+        read_back = yield "pool", pool
+        counts = read_back().join(target_counts, "b", "full").select(
             "b",
             F.coalesce("ct", F.lit(0)).alias("ct"),
             F.coalesce("cq", F.lit(0)).alias("cq"),
         )
-        ratio = dsir_log_ratio(spark, counts, buckets=buckets, alpha=alpha)
-        dsir_score(doc_bucket, ratio).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "weights", f"epoch={int(batch_id)}")
+        ratio = dsir_log_ratio(
+            batch_df.sparkSession, counts, buckets=buckets, alpha=alpha
         )
+        yield "weights", dsir_score(doc_bucket, ratio)
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_epoch_fold(
+        stream_docs, state_dir, ("pool",), _fold, "dsir_maintenance"
     )
-
-
-@register(
-    "corpus_dsir_weights_fast",
-    oracle=None,  # same computation as corpus_dsir_weights with the
-    # xxhash64 feature hasher (no DuckDB twin exists for xxhash64);
-    # the planted ranking/identity tests run THIS path, and the md5
-    # entry carries the cross-engine oracle.
-    doc="Production-path DSIR weights (xxhash64 feature hashing — one "
-    "long hash per gram instead of the md5 hex chain).",
-    tags=("corpus", "mixture", "importance-sampling", "approx"),
-)
-def corpus_dsir_weights_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dsir_logweights(table(spark, sf_dir, "documents"))
 
 
 NEYMAN_BUDGET = 10_000  # total sample budget the registry entry allocates

@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
+from ..checkpointing import start_epoch_fold
 from ..queries import register
 
 
@@ -182,16 +183,12 @@ def stream_scd2(
     attr: str = "seg",
     ts_col: str = "ts",
     initial: DataFrame | None = None,
-    query_name: str = "scd2_maintenance",
 ):
     """Structured-Streaming SCD2 maintenance: fold each micro-batch of
-    attribute updates into an epoch-keyed dimension parquet via
-    ``foreachBatch`` — the same replay discipline as
-    ``sketches.stream_hll_users`` (a batch reads the largest epoch
-    STRICTLY below its own id and overwrites its own epoch, so a
-    crash-replay re-reads the same pre-state and rewrites the same
-    files instead of double-applying; ``scd2_apply`` itself is
-    deterministic, so the rewrite is bit-identical).
+    attribute updates into an epoch-keyed dimension parquet
+    (``dim/``) through :func:`~..checkpointing.start_epoch_fold`.
+    ``scd2_apply`` is deterministic, so a replayed batch rewrites its
+    epoch bit-identically.
 
     Within one batch, updates collapse to last-write-per-key before
     applying (max (ts, attr) struct — deterministic under ties), the
@@ -201,35 +198,18 @@ def stream_scd2(
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
-
-    def _epoch_below(bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, "dim"), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below(int(batch_id))
-        if e >= 0:
-            state = spark.read.parquet(
-                os.path.join(state_dir, "dim", f"epoch={e}")
-            )
-        elif initial is not None:
-            state = initial
-        else:
-            state = (
-                batch_df.select(
-                    F.col(key),
-                    F.col(attr),
-                    F.col(ts_col).alias("effective_from"),
-                    F.col(ts_col).alias("effective_to"),
-                    F.lit(True).alias("is_current"),
-                )
-                .limit(0)
-            )
+    def _fold(batch_df: DataFrame, dim: DataFrame | None):
+        if dim is None:
+            dim = initial
+        if dim is None:
+            dim = batch_df.select(
+                F.col(key),
+                F.col(attr),
+                F.col(ts_col).alias("effective_from"),
+                F.col(ts_col).alias("effective_to"),
+                F.lit(True).alias("is_current"),
+            ).limit(0)
         latest = (
             batch_df.groupBy(key)
             .agg(
@@ -241,19 +221,10 @@ def stream_scd2(
             )
             .select(key, F.col("m.a").alias(attr), F.col("m.t").alias(ts_col))
         )
-        folded = scd2_apply(state, latest, key=key, attr=attr, ts_col=ts_col)
-        folded.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "dim", f"epoch={int(batch_id)}")
-        )
+        yield "dim", scd2_apply(dim, latest, key=key, attr=attr, ts_col=ts_col)
 
-    return (
-        stream_updates.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_epoch_fold(
+        stream_updates, state_dir, ("dim",), _fold, "scd2_maintenance"
     )
 
 

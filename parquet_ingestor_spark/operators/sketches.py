@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import table
+from ..checkpointing import start_epoch_fold
 from ..functions import int_e
 from ..queries import register
 
@@ -565,17 +566,13 @@ def stream_hll_users(
     key: str = "event_type",
     val: str = "user_id",
     lgk: int = HLL_LGK,
-    query_name: str = "hll_users_maintenance",
 ):
     """Structured-Streaming wrapper: maintain per-key distinct-count
-    sketches from a streaming source via ``foreachBatch`` — the same
-    epoch discipline as ``stream_heavy_hitters`` (state parquet keyed
-    by streaming batch_id; a batch reads the largest epoch STRICTLY
-    below its own id, so a crash-replay re-reads the same pre-state
-    and overwrites the same epoch instead of double-inserting —
-    though for HLL even a true double-insert is absorbed, since
-    sketch insertion is idempotent per value: the epoch discipline
-    here guards the state files, not the math).
+    sketches from a streaming source through
+    :func:`~..checkpointing.start_epoch_fold`. A replay is safe twice
+    over: the epoch protocol guards the state files, and even a true
+    double insert is absorbed, since sketch insertion is idempotent
+    per value.
 
     ``sketch/<latest>`` holds (key, sk); estimate on read with
     ``hll_sketch_estimate``. State is keys × few-KB forever,
@@ -583,36 +580,12 @@ def stream_hll_users(
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
+    def _fold(batch_df: DataFrame, sketch: DataFrame | None):
+        yield "sketch", hll_fold_batch(sketch, batch_df, key, val, lgk)
 
-    def _epoch_below(bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, "sketch"), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below(int(batch_id))
-        state = (
-            spark.read.parquet(os.path.join(state_dir, "sketch", f"epoch={e}"))
-            if e >= 0
-            else None
-        )
-        folded = hll_fold_batch(state, batch_df, key, val, lgk)
-        folded.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "sketch", f"epoch={int(batch_id)}")
-        )
-
-    return (
-        stream_events.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_epoch_fold(
+        stream_events, state_dir, ("sketch",), _fold, "hll_users_maintenance"
     )
 
 
@@ -806,8 +779,8 @@ def _bloom_positions(
     hash per probe; signed, so pmod folds it into [0, num_bits)).
     ``hasher="md5"``: the oracle-checkable twin — first 15 hex chars
     of md5(i || key) as a BIGINT (< 2^60, non-negative) mod num_bits,
-    reproducible verbatim in DuckDB SQL (the corpus_dsir_weights /
-    _fast twin rule applied to Bloom positions)."""
+    reproducible verbatim in DuckDB SQL, so the registered entry's
+    Bloom positions hash-verify against the oracle."""
     if hasher == "md5":
         return F.array(
             *[
@@ -1002,8 +975,7 @@ _BLOOM_POS_SQL = (
     "never joins the history corpus itself. The registered entry "
     "derives bit positions from md5 (full SQL oracle — promoted from "
     "rows-only, r5 verdict #3); production callers keep the seeded-"
-    "xxhash64 fast path via bloom_build/bloom_probe's default hasher "
-    "(the corpus_dsir_weights/_fast twin rule).",
+    "xxhash64 fast path via bloom_build/bloom_probe's default hasher.",
     tags=("sketch", "dedup", "corpus"),
 )
 def corpus_bloom_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1048,79 +1020,40 @@ def corpus_bloom_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and screen each micro-batch against everything seen BEFORE it.
 
 
-def _latest_epoch_below(path: str, bound: int) -> int:
-    """Replay-safe state floor — delegates to the shared
-    :func:`..checkpointing.latest_epoch_below` (well-formed
-    ``epoch=<digits>`` entries only)."""
-    from ..checkpointing import latest_epoch_below
-
-    return latest_epoch_below(path, bound)
-
-
 def stream_bloom_screen(
     stream_df: DataFrame,
     state_dir: str,
     key_col: str,
     num_bits: int = BLOOM_BITS,
     num_hashes: int = BLOOM_HASHES,
-    query_name: str = "bloom_screen",
 ):
     """The streaming ingest-dedup gate: every micro-batch is screened
     against the Bloom bitmap of ALL prior batches (rows flagged
     ``maybe_seen``; false is a proof of novelty), written to
     ``screened/epoch=<batch_id>``, and then folded into the bitmap at
-    ``bitmap/epoch=<batch_id>``.
-
-    Same epoch discipline as ``stream_hll_users``: state is keyed by
-    streaming batch_id and a batch reads the largest epoch STRICTLY
-    below its own id, so a crash-replay re-screens against the same
-    pre-state and overwrites the same epoch — and even a true double
-    fold is absorbed outright, because bit_or is idempotent (the
-    strongest replay story of the sketch family). State is ≤
-    num_bits/64 rows forever, regardless of stream length.
+    ``bitmap/epoch=<batch_id>``, through
+    :func:`~..checkpointing.start_epoch_fold`. Even a true double fold
+    is absorbed outright, because bit_or is idempotent (the strongest
+    replay story of the sketch family). State is ≤ num_bits/64 rows
+    forever, regardless of stream length.
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _latest_epoch_below(
-            os.path.join(state_dir, "bitmap"), int(batch_id)
-        )
-        state = (
-            spark.read.parquet(
-                os.path.join(state_dir, "bitmap", f"epoch={e}")
+    def _fold(batch_df: DataFrame, bitmap: DataFrame | None):
+        prior = bitmap
+        if prior is None:
+            prior = batch_df.sparkSession.createDataFrame(
+                [], "word long, bits long"
             )
-            if e >= 0
-            else None
-        )
-        bitmap = (
-            state
-            if state is not None
-            else spark.createDataFrame([], "word long, bits long")
-        )
-        bloom_probe(
-            bitmap, batch_df, F.col(key_col), num_bits, num_hashes
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "screened", f"epoch={int(batch_id)}")
+        yield "screened", bloom_probe(
+            prior, batch_df, F.col(key_col), num_bits, num_hashes
         )
         fresh = bloom_build(batch_df, F.col(key_col), num_bits, num_hashes)
-        folded = bloom_merge(state, fresh) if state is not None else fresh
-        folded.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "bitmap", f"epoch={int(batch_id)}")
-        )
+        yield "bitmap", fresh if bitmap is None else bloom_merge(bitmap, fresh)
 
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_epoch_fold(
+        stream_df, state_dir, ("bitmap",), _fold, "bloom_screen"
     )
 
 
@@ -1337,48 +1270,23 @@ def stream_cm_counts(
     key_cols: list[str],
     depth: int = CM_DEPTH,
     width: int = CM_WIDTH,
-    query_name: str = "cm_counts_maintenance",
 ):
     """Structured-Streaming wrapper: maintain a Count-Min frequency
-    grid from a stream via ``foreachBatch`` + epoch-keyed parquet
-    state (the ``stream_pricing_summary`` discipline — integer sums
-    are not idempotent, so a replayed batch must re-read the largest
-    epoch STRICTLY below its own id and overwrite its epoch, never
-    double-add). State is ≤ depth·width rows forever, regardless of
-    stream length; estimate on read with ``cm_estimate``.
+    grid from a stream through
+    :func:`~..checkpointing.start_epoch_fold`. Integer sums are not
+    idempotent, so the epoch protocol is what keeps a replayed batch
+    from double-adding. State is ≤ depth·width rows forever,
+    regardless of stream length; estimate on read with
+    ``cm_estimate``.
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
-
-    def _epoch_below(bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, "grid"), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below(int(batch_id))
-        state = (
-            spark.read.parquet(os.path.join(state_dir, "grid", f"epoch={e}"))
-            if e >= 0
-            else None
-        )
-        folded = cm_fold_batch(
-            state, batch_df, key_cols, depth=depth, width=width
-        )
-        folded.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "grid", f"epoch={int(batch_id)}")
+    def _fold(batch_df: DataFrame, grid: DataFrame | None):
+        yield "grid", cm_fold_batch(
+            grid, batch_df, key_cols, depth=depth, width=width
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_epoch_fold(
+        stream_df, state_dir, ("grid",), _fold, "cm_counts_maintenance"
     )

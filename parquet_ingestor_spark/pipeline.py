@@ -33,7 +33,7 @@ size like the reference's byte-threshold flush; everything JVM-side.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -79,7 +79,6 @@ class PipelineConfig:
     # O23 payload sampling: log one input payload every N rows (0 = off).
     payload_log_every: int = 0
     payload_log_max_chars: int = 4096  # reference truncates at 4 KiB
-    extra_writer_options: dict[str, str] = field(default_factory=dict)
 
 
 def with_time_partitions(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -318,13 +317,11 @@ def start_stream_ingest(
     partitioned parquet, bad → DLQ) while keeping the file-sink commit
     semantics via the checkpoint.
     """
+    # imported here: sources imports ENVELOPE_SCHEMA from this module
+    from .sources import jsonl_dir_source
+
     cfg = config or PipelineConfig()
-    raw = (
-        spark.readStream.format("json")
-        .schema(ENVELOPE_SCHEMA)
-        .option("maxFilesPerTrigger", cfg.max_files_per_trigger)
-        .load(landing_dir)
-    )
+    raw = jsonl_dir_source(spark, landing_dir, cfg.max_files_per_trigger)
 
     dlq_dir = f"{out_dir.rstrip('/')}/{cfg.dlq_suffix}"
     data_dir = f"{out_dir.rstrip('/')}/data"

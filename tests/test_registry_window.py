@@ -61,13 +61,13 @@ def test_window_covers_all_stale_rows_except_documented_deferral():
     them), so the window is pure least-recently-checked rotation.
     After this round no entry's latest driver row may predate round
     4: the 2 BPE promotions + 4 round-3-deferred + all 26 remaining
-    round-4-cohort entries hold slots. The only documented skips are
-    the two permanently rows-only entries (corpus_dsir_weights_fast,
-    unigram_lm_train — a window slot buys them no hash check; their
-    differential verification lives in tests, see the ROUND-10 note in
-    queries/__init__.py). No silently forgotten entries: after the
-    round-10 rotation, every oracle entry whose latest driver row
-    predates round 6 holds a slot."""
+    round-4-cohort entries hold slots. The only documented skip is the
+    permanently rows-only entry (unigram_lm_train — a window slot buys
+    it no hash check; its differential verification lives in
+    test_corpus.py::test_unigram_lm_train_matches_python_reference).
+    No silently forgotten entries: after the round-10 rotation, every
+    oracle entry whose latest driver row predates round 6 holds a
+    slot."""
     import json
     from pathlib import Path
 

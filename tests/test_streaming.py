@@ -374,6 +374,58 @@ def test_gc_epoch_state_keeps_replay_floor(tmp_path):
     assert gc_epoch_state(str(tmp_path / "absent"), keep_last=2) == []
 
 
+
+def test_epoch_fold_replays_lost_commit_exactly_once(spark, tmp_path):
+    """The epoch protocol with a fold that is NOT idempotent (a running
+    row count): when only the newest batch's commit is lost, the
+    restarted query replays that batch into the same pre-state, so the
+    count stays exact and the epoch set does not change; a micro-batch
+    with no rows writes no epoch."""
+    from parquet_ingestor_spark.checkpointing import start_epoch_fold
+
+    landing = str(tmp_path / "landing")
+    for n in (3, 5, 7):
+        spark.range(n).coalesce(1).write.mode("append").parquet(landing)
+
+    def _running_count(batch_df, total):
+        n = batch_df.agg(F.count("*").alias("n"))
+        if total is not None:
+            n = total.unionByName(n).agg(F.sum("n").alias("n"))
+        yield "count", n
+
+    state_dir = tmp_path / "state"
+
+    def _drain():
+        stream = (
+            spark.readStream.schema("id long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(landing)
+        )
+        start_epoch_fold(
+            stream, str(state_dir), ("count",), _running_count, "row_count"
+        ).awaitTermination(120)
+
+    def _epochs():
+        return sorted(d.name for d in (state_dir / "count").iterdir())
+
+    def _count(epoch):
+        return spark.read.parquet(str(state_dir / "count" / epoch)).first().n
+
+    _drain()
+    assert _epochs() == ["epoch=0", "epoch=1", "epoch=2"]
+    assert _count("epoch=2") == 15
+
+    # lose batch 2's commit (its state write already landed) and add a
+    # file with no rows, which becomes batch 3
+    commits = state_dir / "_checkpoint" / "commits"
+    (commits / "2").unlink()
+    (commits / ".2.crc").unlink(missing_ok=True)
+    spark.range(0).coalesce(1).write.mode("append").parquet(landing)
+    _drain()
+    assert (commits / "2").exists() and (commits / "3").exists()
+    assert _epochs() == ["epoch=0", "epoch=1", "epoch=2"]
+    assert _count("epoch=2") == 15, "the replayed batch was counted twice"
+
 def test_hll_pairwise_overlap_tracks_exact(spark, sf_dir):
     """Every pairwise intersection estimate lands within 5% of the
     exact distinct-user intersection (lgk=12 => ~1.6% per-sketch
